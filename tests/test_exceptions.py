@@ -236,3 +236,109 @@ class TestResolveWithRound2Shapes:
                 return res(s)
         assert ds.collect() == [ref(s) for s in data]
         assert ds.exception_counts == {}
+
+
+def _divider(k):
+    """An object whose method the compiler cannot lower, so a UDF
+    calling it runs on the Arrow/pandas fallback path.  The class is
+    local so cloudpickle ships it by value to the Python workers."""
+    class Divider:
+        def apply(self, x):
+            return 60 // (x % k)
+    return Divider()
+
+
+def _spark_jobs(ctx, action):
+    """Run ``action`` under a fresh job group; return its result and the
+    number of Spark jobs it started."""
+    sc = ctx.spark.sparkContext
+    group = f"collect_jobcount_{id(action)}"
+    sc.setJobGroup(group, "collect job-count probe")
+    try:
+        out = action()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestOnePassCollect:
+    """collect() returns rows and exception_counts from ONE Spark job
+    (the reference's dual-mode pass); take(n) still counts over the
+    whole dataset."""
+
+    def test_fallback_resolve_chain_is_one_job(self, ctx):
+        from conftest import cpython_reference
+        div = _divider(5)
+        data = [6, 3, 10, 4, 9, 15, 12, 20, 7]
+
+        def chain(x):
+            try:
+                y = div.apply(x)
+            except ZeroDivisionError:
+                y = 100 // (x - 10)
+            return y + 1
+
+        before = ctx.metrics.fallbackUDFs
+        ds = (ctx.parallelize(data)
+              .map(lambda x: div.apply(x))
+              .resolve(ZeroDivisionError, lambda x: 100 // (x - 10))
+              .map(lambda y: y + 1))
+        assert ctx.metrics.fallbackUDFs > before
+        want, n_exc = cpython_reference(data, chain)
+        assert n_exc == 1
+        m = ctx.metrics
+        actions, total = m.numActions, m.totalExceptionCount
+        rows, jobs = _spark_jobs(ctx, ds.collect)
+        assert jobs == 1
+        assert rows == want
+        assert ds.exception_counts == {"ZeroDivisionError": n_exc}
+        assert m.numActions == actions + 1
+        assert m.lastActionRowCount == len(want)
+        assert m.totalExceptionCount == total + n_exc
+
+    def test_parked_join_rows_and_counts_match_reference(self, ctx):
+        from conftest import cpython_reference
+        div = _divider(4)
+        lrows = [(1, 5), (2, 4), (3, 7), (4, 9)]
+        rrows = [(1, "1"), (3, "b"), (4, "4")]
+        left = ctx.parallelize(lrows, ["k", "d"]) \
+            .withColumn("q", lambda x: div.apply(x["d"]))
+        right = ctx.parallelize(rrows, ["k", "v"])
+        ds = left.join(right, "k", "k") \
+            .withColumn("n", lambda x: int(x["v"]))
+        rows = ds.collect()
+
+        # left rows as (d, q, k), joined in plain Python, then the
+        # post-join column
+        lq, n_q = cpython_reference(
+            lrows, lambda x: (x[1], div.apply(x[1]), x[0]))
+        rv = dict(rrows)
+        joined = [(d, q, k, rv[k]) for d, q, k in lq if k in rv]
+        want, n_n = cpython_reference(joined, lambda x: x + (int(x[3]),))
+        assert (n_q, n_n) == (1, 1)
+        assert sorted(rows) == sorted(want)
+        assert ds.exception_counts == {"ZeroDivisionError": 1,
+                                       "ValueError": 1}
+
+    def test_pyobj_collect_with_exception_rows(self, ctx):
+        import numpy as np
+        from tuplex_spark.udf.fallback import EXC_CODE
+        data = [np.array([1.0, 3.0]), "bad", np.array([2.0, 2.0])]
+        ds = ctx.parallelize(data).map(lambda a: a / a.sum())
+        assert ds._pyobj and EXC_CODE in ds._df.columns
+        rows, jobs = _spark_jobs(ctx, ds.collect)
+        assert jobs == 1
+        assert [list(r) for r in rows] == [[0.25, 0.75], [0.5, 0.5]]
+        assert ds.exception_counts == {"AttributeError": 1}
+
+    def test_one_tuple_collect_with_exception_rows(self, ctx):
+        ds = ctx.parallelize([1, 0, 2, 0]).map(lambda x: (10 // x,))
+        assert ds._tuple1
+        assert ds.collect() == [(10,), (5,)]
+        assert ds.exception_counts == {"ZeroDivisionError": 2}
+
+    def test_take_counts_whole_dataset(self, ctx):
+        ds = ctx.parallelize([1, 0, 2, 0, 5]).map(lambda x: 10 // x)
+        assert ds.take(1) == [10]
+        assert ctx.metrics.lastActionRowCount == 1
+        assert ds.exception_counts == {"ZeroDivisionError": 2}

@@ -527,6 +527,48 @@ def _scan_mtime(pattern: str) -> float:
         return -1.0
 
 
+# (limit, usage) files of the process's memory cgroup: v2, then v1
+_CGROUP_MEMORY = (
+    ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory.current"),
+    ("/sys/fs/cgroup/memory/memory.limit_in_bytes",
+     "/sys/fs/cgroup/memory/memory.usage_in_bytes"),
+)
+
+
+def _committable_bytes(meminfo: str = "/proc/meminfo",
+                       cgroups=_CGROUP_MEMORY) -> int | None:
+    """Bytes the host can commit now: MemAvailable, capped by what the
+    memory cgroup's limit leaves above its usage.  None when
+    MemAvailable is unreadable (no /proc)."""
+    try:
+        with open(meminfo) as f:
+            avail = next(int(line.split()[1]) * 1024 for line in f
+                         if line.startswith("MemAvailable:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return None
+    for limit_path, usage_path in cgroups:
+        try:
+            with open(limit_path) as f:
+                limit = f.read().strip()
+            with open(usage_path) as f:
+                usage = int(f.read())
+        except (OSError, ValueError):
+            continue
+        if limit != "max":
+            avail = min(avail, int(limit) - usage)
+        break
+    return avail
+
+
+def _driver_memory_for(committable: int | None) -> str:
+    """Default driver heap: about a quarter of the committable bytes,
+    floored at 1g and capped at 16g (16g when unknown)."""
+    if committable is None:
+        return "16g"
+    mb = committable // 4 // (1 << 20)
+    return f"{max(1024, min(16 * 1024, mb))}m"
+
+
 def build_session(name: str, options: dict | None = None) -> SparkSession:
     """Engine-default SparkSession. ANSI off is load-bearing: the exception
     model relies on NULL-on-error expression semantics plus explicit guard
@@ -680,12 +722,14 @@ def build_session(name: str, options: dict | None = None) -> SparkSession:
     # NOTE: -Xms=-Xmx + AlwaysPreTouch COMMITS AND TOUCHES the whole
     # heap at startup (the point: no first-touch page faults mid-query).
     # On a host without `mem` free this fails to launch rather than
-    # degrading — size SPARK_DRIVER_MEMORY / tuplex.driverMemory to
-    # what the host actually has, or set tuplex.preTouchHeap=False to
+    # degrading, so with neither SPARK_DRIVER_MEMORY nor
+    # tuplex.driverMemory set the heap is sized to what the host can
+    # commit (_driver_memory_for); set tuplex.preTouchHeap=False to
     # restore the old lazy-commit behavior (accepting the variance
     # documented in SCALE.md).
     mem = str(options.get("tuplex.driverMemory")
-              or os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+              or os.environ.get("SPARK_DRIVER_MEMORY")
+              or _driver_memory_for(_committable_bytes()))
     pin = options.get("tuplex.preTouchHeap", True)
     jvm_opts = "-XX:ReservedCodeCacheSize=512m"
     if pin:

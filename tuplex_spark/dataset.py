@@ -26,6 +26,7 @@ from __future__ import annotations
 import json
 import functools
 import re as _re
+from collections import Counter
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
@@ -1021,20 +1022,27 @@ class DataSet:
 
     @property
     def exception_counts(self) -> dict[str, int]:
-        """Exception class -> count, populated by the last action
-        (reference: dataset.py:706)."""
+        """Exception class -> count of unresolved rows over the whole
+        dataset, populated by the last action (reference: dataset.py:706).
+        ``collect()`` counts the live exception rows in the same Spark job
+        that returns its rows (one pass, like the reference's dual-mode
+        ResolveTask); ``take(n)`` stops early, so it runs a separate full
+        count pass.  Rows parked at join/aggregate/unique boundaries are
+        counted by one small job per parked frame either way."""
         return dict(self._exception_counts)
 
-    def _collect_exception_counts(self):
-        counts: dict[str, int] = {}
-        frames = list(self._parked)
-        if self._has_exc:
-            frames.append(self._df.filter(F.col(EXC_CODE) != 0).select(
-                F.col(EXC_CODE).alias("code")))
+    def _collect_exception_counts(self, frames, codes=()):
+        """Set ``exception_counts`` from the failed rows' ``codes``
+        already on the driver plus a per-code count of each frame's
+        ``code`` column."""
+        tallies = list(Counter(codes).items())
         for fr in frames:
-            for row in fr.groupBy("code").count().collect():
-                name = E.name_for_code(row["code"])
-                counts[name] = counts.get(name, 0) + row["count"]
+            tallies += [(r["code"], r["count"])
+                        for r in fr.groupBy("code").count().collect()]
+        counts: dict[str, int] = {}
+        for code, n in tallies:
+            name = E.name_for_code(code)
+            counts[name] = counts.get(name, 0) + n
         self._exception_counts = counts
 
     # -------------------------------------------------------------- joins
@@ -1123,10 +1131,19 @@ class DataSet:
     def take(self, nmax: int = 5) -> list:
         import time as _time
         t0 = _time.time()
-        df, parked = self._split_exceptions()
-        self._parked_for_counts = parked
-        rows = df.collect() if nmax is None or nmax < 0 else df.take(nmax)
-        self._collect_exception_counts()
+        if (nmax is None or nmax < 0) and self._has_exc:
+            # one Spark job: the visible columns plus the code, split on
+            # the driver (a null code is neither clean nor counted, as
+            # in _split_exceptions)
+            full = self._df.select(*self._columns, EXC_CODE).collect()
+            rows = [r[:-1] for r in full if r[-1] == 0]
+            self._collect_exception_counts(
+                self._parked, [r[-1] for r in full if r[-1]])
+        else:
+            df, parked = self._split_exceptions()
+            rows = df.collect() if nmax is None or nmax < 0 \
+                else df.take(nmax)
+            self._collect_exception_counts(parked)
         m = self._ctx._metrics
         m.totalRunTime += _time.time() - t0
         m.numActions += 1

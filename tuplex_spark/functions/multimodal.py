@@ -23,6 +23,7 @@ that is the only sensible place for codec libraries.  Batches arrive
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import struct
 
@@ -715,24 +716,30 @@ class _BitReader:
 # 16 bits, so ONE 16-bit peek + one list index replaces the bit-by-bit
 # walk (measured ~40% of scan time).  Images overwhelmingly share the
 # Annex K tables, so the 65536-entry build amortizes across every
-# image a worker decodes (guide §4.5 heavyweight-init-once).
-_HUFF_LUT_CACHE: dict = {}
-
-
+# image a worker decodes (guide §4.5 heavyweight-init-once).  Encoders
+# that optimise their tables make every image distinct, so the cache is
+# a small LRU (~512 KB per table) rather than unbounded.
 def _build_huff(counts, symbols):
     """16-bit-peek flat table: lut[peek16] = (symbol, code_length),
     (None, 0) for prefixes that match no code (bad huffman stream).
     Consumption semantics identical to the bit-by-bit walk: exactly
     ``code_length`` bits are consumed per symbol, and the _BitReader's
-    zero-padding past markers/EOF feeds the same bits either way."""
-    key = (bytes(counts), bytes(symbols))
-    lut = _HUFF_LUT_CACHE.get(key)
-    if lut is not None:
-        return lut
+    zero-padding past markers/EOF feeds the same bits either way.
+    ValueError when the counts overfill the 16-bit code space or name
+    more symbols than the table holds."""
+    return _huff_lut(bytes(counts), bytes(symbols))
+
+
+@functools.lru_cache(maxsize=8)
+def _huff_lut(counts: bytes, symbols: bytes):
+    if sum(counts) > len(symbols):
+        raise ValueError("bad huffman table")
     lut = [(None, 0)] * 65536
     code = 0
     k = 0
     for length in range(1, 17):
+        if code + counts[length - 1] > (1 << length):
+            raise ValueError("bad huffman table")
         for _ in range(counts[length - 1]):
             base = code << (16 - length)
             entry = (symbols[k], length)
@@ -741,7 +748,6 @@ def _build_huff(counts, symbols):
             code += 1
             k += 1
         code <<= 1
-    _HUFF_LUT_CACHE[key] = lut
     return lut
 
 
