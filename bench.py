@@ -435,7 +435,7 @@ def assert_stability_confs(spark) -> None:
     jopts = c.get("spark.driver.extraJavaOptions", "")
     assert "-XX:+AlwaysPreTouch" in jopts and "-Xms" in jopts, \
         ("bench session heap not pinned+pre-touched (got %r) — "
-         "use build_session / tuplex.preTouchHeap" % jopts)
+         "use build_session" % jopts)
 
 
 def main():

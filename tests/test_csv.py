@@ -23,6 +23,22 @@ class TestInference:
         assert ds.columns == ["name", "age", "score"]
         assert ds.collect() == [("alice", 34, 1.5), ("bob", 29, 2.25)]
 
+    def test_detection_budget_reaches_sampler(self, spark, tmpcsv,
+                                              monkeypatch):
+        import tuplex_spark as tx
+        from tuplex_spark.sources import csv_inference as CSV
+        seen, real = [], CSV.sample_files
+
+        def spy(pattern, nbytes=CSV.MAX_DETECTION_BYTES, **kw):
+            seen.append(nbytes)
+            return real(pattern, nbytes, **kw)
+        monkeypatch.setattr(CSV, "sample_files", spy)
+        p = tmpcsv("a.csv", "a,b\n1,x\n2,y\n")
+        c = tx.Context(conf={"tuplex.csv.maxDetectionMemory": 2048},
+                       spark=spark)
+        assert c.csv(p).columns == ["a", "b"]
+        assert seen == [2048]
+
     def test_no_header(self, ctx, tmpcsv):
         p = tmpcsv("b.csv", "1,x\n2,y\n3,z\n")
         ds = ctx.csv(p)

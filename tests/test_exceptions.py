@@ -1,6 +1,10 @@
 """Exception-model semantics: implicit drop, resolve chains, ignore,
 in-order merge (reference: test_exceptions.py, test_resolve.py)."""
 
+import itertools
+
+import pytest
+
 
 class TestImplicitDrop:
     def test_none_rows_dropped_and_counted(self, ctx):
@@ -248,11 +252,14 @@ def _divider(k):
     return Divider()
 
 
+_GROUPS = itertools.count()
+
+
 def _spark_jobs(ctx, action):
     """Run ``action`` under a fresh job group; return its result and the
     number of Spark jobs it started."""
     sc = ctx.spark.sparkContext
-    group = f"collect_jobcount_{id(action)}"
+    group = f"collect_jobcount_{next(_GROUPS)}"
     sc.setJobGroup(group, "collect job-count probe")
     try:
         out = action()
@@ -297,27 +304,38 @@ class TestOnePassCollect:
         assert m.totalExceptionCount == total + n_exc
 
     def test_parked_join_rows_and_counts_match_reference(self, ctx):
+        """Rows parked on both sides of a join are counted in collect()'s
+        own job: it starts no more jobs than collecting the clean frame
+        of an identically built dataset."""
         from conftest import cpython_reference
         div = _divider(4)
         lrows = [(1, 5), (2, 4), (3, 7), (4, 9)]
         rrows = [(1, "1"), (3, "b"), (4, "4")]
-        left = ctx.parallelize(lrows, ["k", "d"]) \
-            .withColumn("q", lambda x: div.apply(x["d"]))
-        right = ctx.parallelize(rrows, ["k", "v"])
-        ds = left.join(right, "k", "k") \
-            .withColumn("n", lambda x: int(x["v"]))
-        rows = ds.collect()
 
-        # left rows as (d, q, k), joined in plain Python, then the
-        # post-join column
+        def build():
+            left = ctx.parallelize(lrows, ["k", "d"]) \
+                .withColumn("q", lambda x: div.apply(x["d"]))
+            right = ctx.parallelize(rrows, ["k", "v"]) \
+                .withColumn("w", lambda x: 12 // (x["k"] - 4))
+            return left.join(right, "k", "k") \
+                .withColumn("n", lambda x: int(x["v"]))
+        ds = build()
+        rows, jobs = _spark_jobs(ctx, ds.collect)
+        _, clean_jobs = _spark_jobs(ctx, build().toDF().collect)
+        assert jobs <= clean_jobs
+
+        # both sides in plain Python, joined on k, then the post-join
+        # column
         lq, n_q = cpython_reference(
             lrows, lambda x: (x[1], div.apply(x[1]), x[0]))
-        rv = dict(rrows)
-        joined = [(d, q, k, rv[k]) for d, q, k in lq if k in rv]
+        rw, n_w = cpython_reference(
+            rrows, lambda x: (x[0], x[1], 12 // (x[0] - 4)))
+        rv = {k: (v, w) for k, v, w in rw}
+        joined = [(d, q, k) + rv[k] for d, q, k in lq if k in rv]
         want, n_n = cpython_reference(joined, lambda x: x + (int(x[3]),))
-        assert (n_q, n_n) == (1, 1)
+        assert (n_q, n_w, n_n) == (1, 1, 1)
         assert sorted(rows) == sorted(want)
-        assert ds.exception_counts == {"ZeroDivisionError": 1,
+        assert ds.exception_counts == {"ZeroDivisionError": 2,
                                        "ValueError": 1}
 
     def test_pyobj_collect_with_exception_rows(self, ctx):
@@ -342,3 +360,52 @@ class TestOnePassCollect:
         assert ds.take(1) == [10]
         assert ctx.metrics.lastActionRowCount == 1
         assert ds.exception_counts == {"ZeroDivisionError": 2}
+
+    def test_take_counts_in_one_extra_job(self, ctx):
+        def build():
+            return ctx.parallelize([1, 0, "x", 2, 0, 5]) \
+                .map(lambda x: 10 // x)
+        ds = build()
+        assert ds._parked is not None
+        rows, jobs = _spark_jobs(ctx, lambda: ds.take(2))
+        _, clean_jobs = _spark_jobs(ctx, lambda: build().toDF().take(2))
+        assert rows == [10, 5]
+        assert jobs <= clean_jobs + 1
+        assert ds.exception_counts == {"ZeroDivisionError": 2,
+                                       "BadParallelizeInput": 1}
+
+
+class TestParkedCounts:
+    """exception_counts stay exact whichever source or boundary parked
+    the rows, through both collect() and take(n)."""
+
+    @staticmethod
+    def _check(ds, want_rows, want_counts):
+        assert sorted(ds.collect()) == sorted(want_rows)
+        assert ds.exception_counts == want_counts
+        ds.take(1)
+        assert ds.exception_counts == want_counts
+
+    def test_parallelize_bad_rows(self, ctx):
+        ds = ctx.parallelize([(1, "a"), (2, "b"), ("x", "c"), (3,)],
+                             columns=["n", "s"])
+        self._check(ds, [(1, "a"), (2, "b")], {"BadParallelizeInput": 2})
+
+    def test_json_corrupt_records(self, ctx, tmp_path):
+        p = tmp_path / "d.jsonl"
+        p.write_text('{"a": 1, "b": "x"}\nnot json {{\n'
+                     '{"a": 0, "b": "y"}\n{"a": 4, "b": "z"}\n')
+        ds = ctx.json(str(p)).map(lambda x: 8 // x["a"])
+        self._check(ds, [8, 2], {"BadParseInput": 1, "ZeroDivisionError": 1})
+
+    @pytest.mark.parametrize("op, want", [
+        ("union", [12, 6, 3, 3, 6, 2]),
+        ("intersect", [6, 3]),
+        ("subtract", [12]),
+    ])
+    def test_set_ops_park_both_sides(self, ctx, op, want):
+        a = ctx.parallelize([1, 0, "x", 2, 4]).map(lambda x: 12 // x)
+        b = ctx.parallelize([4, 0, 2, 0, None, 6]).map(lambda x: 12 // x)
+        self._check(getattr(a, op)(b), want,
+                    {"BadParallelizeInput": 1, "ZeroDivisionError": 3,
+                     "TypeError": 1})

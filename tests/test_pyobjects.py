@@ -63,6 +63,27 @@ class TestTypeUnstableOutputs:
         ds = ctx.parallelize([1, 2, 3, 4]).map(f)
         assert ds.collect() == ["odd", 20, "odd", 40]
 
+    def test_heterogeneous_map_keeps_upstream_exceptions(self, ctx):
+        """A row that failed upstream keeps its class through a
+        heterogeneous-output map, and struct inputs reach the UDF as
+        tuples, as on every other fallback map."""
+        class Pick:  # a method call keeps f off the compiled path
+            def first(self, x):
+                return x["p"][0]
+        pick = Pick()
+
+        def f(x):
+            v = pick.first(x)
+            return "odd" if v % 2 else v * 10
+
+        rows = [(1, (1, 5)), (0, (2, 6)), (2, (4, 7))]
+        ds = (ctx.parallelize(rows, columns=["k", "p"])
+              .withColumn("q", lambda x: 10 // x["k"])
+              .map(f))
+        assert ds._pyobj
+        assert ds.collect() == ["odd", 40]
+        assert ds.exception_counts == {"ZeroDivisionError": 1}
+
     def test_pyobj_filter_then_map(self, ctx):
         def f(x):
             v = 0

@@ -15,7 +15,7 @@ import json
 
 from pyspark.sql import SparkSession, functions as F, types as T
 
-from .dataset import DataSet
+from .dataset import DataSet, _park
 from .exceptions import code_for
 from .typeutils import infer_schema_from_rows
 from .sources import csv_inference as CSV
@@ -29,7 +29,6 @@ DEFAULTS = {
     "tuplex.inputSplitSize": "64MB",     # reference ContextOptions.cc:227
     "tuplex.shufflePartitions": None,    # None -> leave Spark default
     "tuplex.csv.maxDetectionMemory": CSV.MAX_DETECTION_BYTES,
-    "tuplex.autoBroadcastJoin": True,
 }
 
 
@@ -266,14 +265,11 @@ class Context:
             df, extra_bad = self._parallelize_lenient(data, sschema)
             bad += extra_bad
         cols = [f.name for f in sschema.fields]
-        parked = []
+        parked = None
         if bad:
-            code = code_for("BadParallelizeInput")
-            bad_rows = [(code, json.dumps({"row": list(r) if isinstance(
-                r, tuple) else r}, default=str), "parallelize")
-                for r in bad]
-            parked = [self.spark.createDataFrame(
-                bad_rows, "code int, payload string, op string")]
+            parked = _park(self.spark.createDataFrame(
+                [(code_for("BadParallelizeInput"),)] * len(bad),
+                f"{EXC_CODE} int"))
         return DataSet(self, df, cols, sample=good[:_SAMPLE_ROWS],
                        parked=parked)
 
@@ -315,7 +311,8 @@ class Context:
         null_values = list(null_values or [""])
         delim, has_header, det_cols, tags, multiline = CSV.detect(
             pattern, delimiter, header, null_values, quotechar,
-            float(self._options.get("tuplex.normalcaseThreshold", 0.9)))
+            float(self._options.get("tuplex.normalcaseThreshold", 0.9)),
+            int(self._options["tuplex.csv.maxDetectionMemory"]))
         cols = list(columns) if columns else det_cols
         if not cols:
             raise ValueError(
@@ -400,21 +397,16 @@ class Context:
         if schema is not None:
             reader = reader.schema(schema)
         df = reader.json(pattern)
-        bad = None
+        parked = None
         if "_corrupt_record" in df.columns:
             cached = df.cache()
-            bad = cached.filter(F.col("_corrupt_record").isNotNull()) \
-                .select("_corrupt_record")
+            parked = _park(cached.filter(
+                F.col("_corrupt_record").isNotNull()).select(
+                F.lit(code_for("BadParseInput")).alias(EXC_CODE)))
             df = cached.filter(F.col("_corrupt_record").isNull()) \
                 .drop("_corrupt_record")
         if columns:
             df = df.toDF(*columns)
-        parked = []
-        if bad is not None:
-            code = code_for("BadParseInput")
-            parked = [bad.select(F.lit(code).alias("code"),
-                                 F.col("_corrupt_record").alias("payload"),
-                                 F.lit("json").alias("op"))]
         return DataSet(self, df, df.columns,
                        sample=self._sample_from_df(df), parked=parked)
 
@@ -724,16 +716,12 @@ def build_session(name: str, options: dict | None = None) -> SparkSession:
     # On a host without `mem` free this fails to launch rather than
     # degrading, so with neither SPARK_DRIVER_MEMORY nor
     # tuplex.driverMemory set the heap is sized to what the host can
-    # commit (_driver_memory_for); set tuplex.preTouchHeap=False to
-    # restore the old lazy-commit behavior (accepting the variance
-    # documented in SCALE.md).
+    # commit (_driver_memory_for).
     mem = str(options.get("tuplex.driverMemory")
               or os.environ.get("SPARK_DRIVER_MEMORY")
               or _driver_memory_for(_committable_bytes()))
-    pin = options.get("tuplex.preTouchHeap", True)
-    jvm_opts = "-XX:ReservedCodeCacheSize=512m"
-    if pin:
-        jvm_opts += f" -Xms{mem} -XX:+AlwaysPreTouch"
+    jvm_opts = (f"-XX:ReservedCodeCacheSize=512m -Xms{mem} "
+                "-XX:+AlwaysPreTouch")
     b = (b
          .config("spark.driver.extraJavaOptions", jvm_opts)
          .config("spark.driver.memory", mem))

@@ -24,19 +24,20 @@ Execution model (Spark-first, not a port):
 from __future__ import annotations
 
 import json
-import functools
 import re as _re
 from collections import Counter
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from . import exceptions as E
-from .typeutils import infer_type, super_type
 from .udf import compiler, fallback
 from .udf.compiler import CompileError
 from .udf.fallback import EXC_CODE, EXC_OP, EXC_PAYLOAD
 
 _HIDDEN = (EXC_CODE, EXC_PAYLOAD, EXC_OP)
+_HIDDEN_FIELDS = (T.StructField(EXC_CODE, T.IntegerType(), False),
+                  T.StructField(EXC_PAYLOAD, T.StringType(), True),
+                  T.StructField(EXC_OP, T.StringType(), True))
 
 # exception payloads round-trip through to_json/from_json; the default
 # timestampFormat keeps only milliseconds, silently handing resolvers a
@@ -213,9 +214,10 @@ class DataSet:
         self._columns = list(columns)
         self._pyobj = pyobj  # PYOBJECT mode: rows are pickled objects
         self._sample = sample if sample is not None else []
-        # quarantined exception rows cut off at relational boundaries
-        # (join/aggregate/unique): list of DataFrames (code, payload, op)
-        self._parked = list(parked or [])
+        # exception rows cut off at relational boundaries (join,
+        # aggregate, unique, sort, limit, set ops) and at the sources:
+        # one frame of their __exc_code, or None (see _park)
+        self._parked = parked
         self._last_op = last_op  # UDFOpInfo of the last resolvable op
         self._op_seq = op_seq
         self._exception_counts: dict[str, int] = {}
@@ -297,10 +299,7 @@ class DataSet:
             try:
                 compiled = compiler.compile_udf(
                     fn, in_schema, with_guards=self._exc_enabled)
-            except CompileError as _dbg_e:
-                import os as _os
-                if _os.environ.get("TUPLEX_DEBUG_COMPILE"):
-                    print(f"DBGCOMPILE: {_dbg_e}", flush=True)
+            except CompileError:
                 compiled = None
             m = self._ctx._metrics
             m.totalCompilationTime += _time.time() - t0
@@ -523,9 +522,7 @@ class DataSet:
         schema_fields = [self._df.schema[c] for c in keep] + \
             [T.StructField(n, t, True) for n, t in out_specs]
         if capture:
-            schema_fields += [T.StructField(EXC_CODE, T.IntegerType(), False),
-                              T.StructField(EXC_PAYLOAD, T.StringType(), True),
-                              T.StructField(EXC_OP, T.StringType(), True)]
+            schema_fields += _HIDDEN_FIELDS
         out_schema = T.StructType(schema_fields)
         src, null_flags = _with_null_flags(self._df, in_cols)
         runner = fallback.make_map_in_pandas(
@@ -558,65 +555,20 @@ class DataSet:
         Spark type: results are pickled into a PYOBJ column and the
         dataset continues in PYOBJECT mode (map/filter; collect returns
         the exact heterogeneous Python values)."""
-        import pickle
-        from .udf.fallback import UDFRow, _apply, _clean, _clean_typed
-
-        arity = getattr(getattr(fn, "__code__", None), "co_argcount", 1)
         capture = self._exc_enabled
-        names = list(in_cols)
-        src, null_flags = _with_null_flags(self._df, names)
-        in_dtypes = [self._df.schema[c].dataType for c in names]
+        out_specs = [(PYOBJ_COL, T.BinaryType())]
         schema_fields = [T.StructField(PYOBJ_COL, T.BinaryType(), True)]
         if capture:
-            schema_fields += [T.StructField(EXC_CODE, T.IntegerType(), False),
-                              T.StructField(EXC_PAYLOAD, T.StringType(), True),
-                              T.StructField(EXC_OP, T.StringType(), True)]
-        out_schema = T.StructType(schema_fields)
-
-        def run(batches):
-            import json
-            import pandas as pd
-            for pdf in batches:
-                n = len(pdf)
-                blobs, codes, payloads = [None] * n, [0] * n, [None] * n
-                cols = [pdf[f] for f in names]
-                fcols = [pdf[null_flags[f]] if f in null_flags else None
-                         for f in names]
-                prev_codes = pdf[EXC_CODE].tolist() \
-                    if EXC_CODE in pdf.columns else [0] * n
-                prev_payloads = pdf[EXC_PAYLOAD].tolist() \
-                    if EXC_PAYLOAD in pdf.columns else [None] * n
-                for i in range(n):
-                    if capture and prev_codes[i]:
-                        codes[i] = prev_codes[i]
-                        payloads[i] = prev_payloads[i]
-                        continue
-                    row = tuple(
-                        None if (fc is not None and bool(fc.iloc[i]))
-                        else (_clean_typed(c.iloc[i], t) if fc is not None
-                              else _clean(c.iloc[i]))
-                        for c, fc, t in zip(cols, fcols, in_dtypes))
-                    try:
-                        r = _apply(fn, row if len(row) != 1 else row[0],
-                                   arity, names)
-                        blobs[i] = pickle.dumps(r)
-                    except Exception as e:
-                        if not capture:
-                            raise
-                        codes[i] = E.code_for_instance(e)
-                        payloads[i] = json.dumps(dict(zip(names, row)),
-                                                 default=str)
-                data = {PYOBJ_COL: blobs}
-                if capture:
-                    data[EXC_CODE] = codes
-                    data[EXC_PAYLOAD] = payloads
-                    data[EXC_OP] = [op_name if c else None for c in codes]
-                yield pd.DataFrame(data)
-
-        out = src.mapInPandas(run, schema=out_schema)
+            schema_fields += _HIDDEN_FIELDS
+        src, null_flags = _with_null_flags(self._df, in_cols)
+        runner = fallback.make_map_in_pandas(
+            fn, in_cols, out_specs, "pickle", op_name, capture=capture,
+            in_types=[self._df.schema[c].dataType for c in in_cols],
+            null_flags=null_flags)
+        out = src.mapInPandas(runner, schema=T.StructType(schema_fields))
         return DataSet(self._ctx, out, [PYOBJ_COL],
                        sample=self._sample_apply(fn, "map"),
-                       parked=list(self._parked), op_seq=self._op_seq + 1,
+                       parked=self._parked, op_seq=self._op_seq + 1,
                        pyobj=True)
 
     def _apply_pyobj(self, fn, kind: str):
@@ -626,7 +578,7 @@ class DataSet:
         A map whose sampled outputs are representable as Spark types
         promotes the dataset back onto the structured path."""
         import pickle
-        from .typeutils import infer_schema_from_rows, infer_type
+        from .typeutils import infer_schema_from_rows
 
         op_name = self._next_op(kind)
         sample_out = self._sample_apply(fn, "filter" if kind == "filter"
@@ -652,9 +604,7 @@ class DataSet:
             out_fields = [T.StructField(PYOBJ_COL, T.BinaryType(), True)]
         schema_fields = list(out_fields)
         if capture:
-            schema_fields += [T.StructField(EXC_CODE, T.IntegerType(), False),
-                              T.StructField(EXC_PAYLOAD, T.StringType(), True),
-                              T.StructField(EXC_OP, T.StringType(), True)]
+            schema_fields += _HIDDEN_FIELDS
         out_schema = T.StructType(schema_fields)
         is_filter = kind == "filter"
         promote = promote_schema is not None
@@ -703,7 +653,7 @@ class DataSet:
         out = self._df.mapInPandas(run, schema=out_schema)
         stays_pyobj = True if is_filter else not promote
         return DataSet(self._ctx, out, names, sample=sample_out,
-                       parked=list(self._parked), op_seq=self._op_seq + 1,
+                       parked=self._parked, op_seq=self._op_seq + 1,
                        pyobj=stays_pyobj)
 
     # ---------------------------------------------------------- transforms
@@ -797,14 +747,14 @@ class DataSet:
         a, pa = self._split_exceptions()
         b, pb = other._split_exceptions()
         return self._spawn(a.unionByName(b.select(*a.columns)),
-                           parked=pa + pb)
+                           parked=_park(pa, pb))
 
     def intersect(self, other: "DataSet") -> "DataSet":
         """Set intersection (distinct rows present on both sides)."""
         a, pa = self._split_exceptions()
         b, pb = other._split_exceptions()
         return self._spawn(a.intersect(b.select(*a.columns)),
-                           parked=pa + pb)
+                           parked=_park(pa, pb))
 
     def subtract(self, other: "DataSet") -> "DataSet":
         """Set difference (distinct rows of self absent from other —
@@ -813,19 +763,17 @@ class DataSet:
         a, pa = self._split_exceptions()
         b, pb = other._split_exceptions()
         return self._spawn(a.subtract(b.select(*a.columns)),
-                           parked=pa + pb)
+                           parked=_park(pa, pb))
 
     # ---------------------------------------------------------- exceptions
     def _split_exceptions(self):
-        """Move failed rows out of the frame into the parked list."""
+        """(clean rows, parked codes): the live failed rows join the
+        parked frame."""
         if not self._has_exc:
-            return self._df, list(self._parked)
+            return self._df, self._parked
         df = self._df
-        bad = df.filter(F.col(EXC_CODE) != 0).select(
-            F.col(EXC_CODE).alias("code"), F.col(EXC_PAYLOAD).alias("payload"),
-            F.col(EXC_OP).alias("op"))
         good = df.filter(F.col(EXC_CODE) == 0).select(*self._columns)
-        return good, list(self._parked) + [bad]
+        return good, _park(self._parked, df.filter(F.col(EXC_CODE) != 0))
 
     def resolve(self, exc_class, ftor) -> "DataSet":
         """Re-run rows that raised ``exc_class`` in the preceding operator
@@ -958,7 +906,6 @@ class DataSet:
         kind = op.kind
         produced = op.out_cols
         vis_cols = list(self._columns)
-        codes = None  # captured in closure via match expr instead
 
         df = self._df.withColumn("__match", match)
 
@@ -1024,21 +971,15 @@ class DataSet:
     def exception_counts(self) -> dict[str, int]:
         """Exception class -> count of unresolved rows over the whole
         dataset, populated by the last action (reference: dataset.py:706).
-        ``collect()`` counts the live exception rows in the same Spark job
-        that returns its rows (one pass, like the reference's dual-mode
-        ResolveTask); ``take(n)`` stops early, so it runs a separate full
-        count pass.  Rows parked at join/aggregate/unique boundaries are
-        counted by one small job per parked frame either way."""
+        ``collect()`` counts every exception row, live or parked at a
+        join/aggregate/unique boundary, in the same Spark job that
+        returns its rows (one pass, like the reference's dual-mode
+        ResolveTask); ``take(n)`` stops early, so it runs one separate
+        full count job."""
         return dict(self._exception_counts)
 
-    def _collect_exception_counts(self, frames, codes=()):
-        """Set ``exception_counts`` from the failed rows' ``codes``
-        already on the driver plus a per-code count of each frame's
-        ``code`` column."""
-        tallies = list(Counter(codes).items())
-        for fr in frames:
-            tallies += [(r["code"], r["count"])
-                        for r in fr.groupBy("code").count().collect()]
+    def _collect_exception_counts(self, tallies):
+        """Set ``exception_counts`` from (code, count) pairs."""
         counts: dict[str, int] = {}
         for code, n in tallies:
             name = E.name_for_code(code)
@@ -1131,19 +1072,27 @@ class DataSet:
     def take(self, nmax: int = 5) -> list:
         import time as _time
         t0 = _time.time()
-        if (nmax is None or nmax < 0) and self._has_exc:
-            # one Spark job: the visible columns plus the code, split on
-            # the driver (a null code is neither clean nor counted, as
-            # in _split_exceptions)
-            full = self._df.select(*self._columns, EXC_CODE).collect()
+        if nmax is not None and nmax >= 0:
+            df, parked = self._split_exceptions()
+            rows = df.take(nmax)
+            self._collect_exception_counts(
+                [] if parked is None else _count_codes(parked))
+        elif not self._has_exc and self._parked is None:
+            rows = self._df.collect()
+            self._collect_exception_counts([])
+        else:
+            # one Spark job: the visible columns plus the code, parked
+            # codes appended, split on the driver (a null code is
+            # neither clean nor counted, as in _split_exceptions)
+            code = EXC_CODE if self._has_exc else F.lit(0).alias(EXC_CODE)
+            full = self._df.select(*self._columns, code)
+            if self._parked is not None:
+                full = full.unionByName(self._parked,
+                                        allowMissingColumns=True)
+            full = full.collect()
             rows = [r[:-1] for r in full if r[-1] == 0]
             self._collect_exception_counts(
-                self._parked, [r[-1] for r in full if r[-1]])
-        else:
-            df, parked = self._split_exceptions()
-            rows = df.collect() if nmax is None or nmax < 0 \
-                else df.take(nmax)
-            self._collect_exception_counts(parked)
+                Counter(r[-1] for r in full if r[-1]).items())
         m = self._ctx._metrics
         m.totalRunTime += _time.time() - t0
         m.numActions += 1
@@ -1156,6 +1105,32 @@ class DataSet:
             vals = [_py_value(r[0]) for r in rows]
             return [(v,) for v in vals] if self._tuple1 else vals
         return [tuple(_py_value(v) for v in r) for r in rows]
+
+    def _sink_frame(self, num_parts=None, num_rows=None):
+        """The clean rows a sink writes: the first ``num_rows`` if
+        given, repartitioned into ``num_parts`` if given."""
+        df, _ = self._split_exceptions()
+        if num_rows:
+            df = df.limit(int(num_rows))
+        return df.repartition(num_parts) if num_parts else df
+
+    def _sink_writer(self, df, part_size=None):
+        """Overwriting writer for ``df``; ``part_size`` (bytes per
+        output file) becomes maxRecordsPerFile through the sample's mean
+        row width as text, 100 bytes without a sample (Spark caps files
+        by record count, not bytes; for encoded formats the text width
+        is an upper bound on file size, the safe direction for the
+        small-files problem this knob exists to fix)."""
+        w = df.write.mode("overwrite")
+        if not part_size:
+            return w
+        est = 100
+        if self._sample:
+            widths = [len(",".join(str(v) for v in
+                          (r if isinstance(r, tuple) else (r,)))) + 1
+                      for r in self._sample[:50]]
+            est = max(1, sum(widths) // len(widths))
+        return w.option("maxRecordsPerFile", max(1, int(part_size) // est))
 
     def show(self, nrows: int = None):
         df, _ = self._split_exceptions()
@@ -1173,7 +1148,7 @@ class DataSet:
         part_name_generator(part_no) -> custom part file names applied by
         post-hoc rename (Spark has no naming hook; same caveat as the
         reference's callback, which names parts by output task)."""
-        df, _ = self._split_exceptions()
+        df = self._sink_frame(kwargs.get("num_parts"), kwargs.get("num_rows"))
         if isinstance(header, list):
             if len(header) != len(self._columns):
                 raise ValueError(
@@ -1182,22 +1157,7 @@ class DataSet:
             df = df.select(*[F.col(c).alias(h)
                              for c, h in zip(self._columns, header)])
             header = True
-        if kwargs.get("num_rows"):
-            df = df.limit(int(kwargs["num_rows"]))
-        n = kwargs.get("num_parts")
-        if n:
-            df = df.repartition(n)
-        w = df.write.mode("overwrite")
-        part_size = kwargs.get("part_size")
-        if part_size:
-            est = 100  # bytes/row fallback when there is no sample
-            if self._sample:
-                widths = [len(",".join(str(v) for v in
-                              (r if isinstance(r, tuple) else (r,)))) + 1
-                          for r in self._sample[:50]]
-                est = max(1, sum(widths) // len(widths))
-            w = w.option("maxRecordsPerFile",
-                         max(1, int(part_size) // est))
+        w = self._sink_writer(df, kwargs.get("part_size"))
         (w.option("header", header).option("nullValue", null_value)
           .csv(path))
         if part_name_generator is not None:
@@ -1214,21 +1174,15 @@ class DataSet:
                     _os.remove(crc)
 
     def toorc(self, path: str, **kwargs):
-        df, _ = self._split_exceptions()
-        n = kwargs.get("num_parts")
-        if n:
-            df = df.repartition(n)
-        df.write.mode("overwrite").orc(path)
+        self._sink_frame(kwargs.get("num_parts")).write.mode(
+            "overwrite").orc(path)
 
     def tojson(self, path: str, **kwargs):
         """JSON-lines sink (write side of Context.json) — the
         training-data interchange format; one JSON object per line,
         Spark-native writer (beyond the reference's csv/orc pair)."""
-        df, _ = self._split_exceptions()
-        n = kwargs.get("num_parts")
-        if n:
-            df = df.repartition(n)
-        df.write.mode("overwrite").json(path)
+        self._sink_frame(kwargs.get("num_parts")).write.mode(
+            "overwrite").json(path)
 
     def toparquet(self, path: str, bucket_by=None, num_buckets: int = 32,
                   sort_by=None, table: str | None = None,
@@ -1250,32 +1204,13 @@ class DataSet:
         column skip whole row groups — the cheap cousin of directory
         partitioning for high-cardinality columns (was silently ignored
         in the non-bucketed path before round 7)."""
-        df, _ = self._split_exceptions()
-        n = kwargs.get("num_parts")
-        if n:
-            df = df.repartition(n)
+        df = self._sink_frame(kwargs.get("num_parts"))
         if bucket_by is None:
             if sort_by:
                 sb = [sort_by] if isinstance(sort_by, str) \
                     else list(sort_by)
                 df = df.sortWithinPartitions(*sb)
-            w = df.write.mode("overwrite")
-            part_size = kwargs.get("part_size")
-            if part_size:
-                # tocsv parity: approximate byte cap per output file via
-                # maxRecordsPerFile from a sampled row-size estimate
-                # (parquet encodes/compresses, so the estimate is the
-                # UNENCODED row width — an upper bound on file size,
-                # which is the safe direction for the small-files
-                # problem this knob exists to fix)
-                est = 100
-                if self._sample:
-                    widths = [len(",".join(str(v) for v in
-                                  (r if isinstance(r, tuple) else (r,))))
-                              + 1 for r in self._sample[:50]]
-                    est = max(1, sum(widths) // len(widths))
-                w = w.option("maxRecordsPerFile",
-                             max(1, int(part_size) // est))
+            w = self._sink_writer(df, kwargs.get("part_size"))
             if partition_by:
                 # hive-layout directory partitioning: every reader's
                 # filter on these columns becomes directory PRUNING
@@ -1301,3 +1236,24 @@ class DataSet:
 
 def _present(df, names):
     return [F.col(n) for n in names if n in df.columns]
+
+
+def _park(*frames):
+    """One frame of the ``__exc_code`` column of ``frames`` (each None
+    or a frame of failed rows only), or None when every one is None —
+    the single shape of a DataSet's parked exception rows."""
+    out = None
+    for fr in frames:
+        if fr is not None:
+            fr = fr.select(EXC_CODE)
+            out = fr if out is None else out.unionByName(fr)
+    return out
+
+
+def _count_codes(codes):
+    """(code, count) pairs of a codes frame in ONE Spark job: a
+    DataFrame groupBy runs as two under adaptive execution (map stage,
+    then result), RDD ``countByValue`` as one, with a map-side combined
+    shuffle."""
+    return [(row.get(0), n)
+            for row, n in codes._jdf.javaRDD().countByValue().items()]

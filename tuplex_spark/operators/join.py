@@ -27,7 +27,7 @@ def join_datasets(left, right, lkey, rkey, how: str,
     joins on exactly one key, dataset.py:384).  Output column order is
     the reference's — left non-key, key(s) in left order, right
     non-key."""
-    from ..dataset import DataSet
+    from ..dataset import DataSet, _park
 
     lkeys = [lkey] if isinstance(lkey, str) else list(lkey)
     rkeys = [rkey] if isinstance(rkey, str) else list(rkey)
@@ -82,7 +82,7 @@ def join_datasets(left, right, lkey, rkey, how: str,
     out = joined.select(*sel)
 
     return DataSet(left._ctx, out, out_cols, sample=[],
-                   parked=lparked + rparked, last_op=None,
+                   parked=_park(lparked, rparked), last_op=None,
                    op_seq=max(left._op_seq, right._op_seq) + 1)
 
 

@@ -111,9 +111,11 @@ def _widen(a: str | None, b: str) -> str:
 
 def detect(pattern: str, delimiter: str | None, header: bool | None,
            null_values, quotechar: str = '"',
-           normalcase_threshold: float = 0.9):
+           normalcase_threshold: float = 0.9,
+           nbytes: int = MAX_DETECTION_BYTES):
     """Returns (delimiter, has_header, columns, tag-per-column,
-    multiline).
+    multiline), from about ``nbytes`` sampled across the glob's files
+    (tuplex.csv.maxDetectionMemory).
 
     Per-column typing is *normal-case majority* typing (reference:
     FileInputOperator.cc:229-299, tuplex.normalcaseThreshold): the most
@@ -126,7 +128,7 @@ def detect(pattern: str, delimiter: str | None, header: bool | None,
     physical lines, and the reader must parse whole records (Spark's
     multiLine mode; costs intra-file split parallelism, so it is only
     turned on when detected)."""
-    texts = sample_files(pattern)
+    texts = sample_files(pattern, nbytes)
     # delimiter: per-file detection, majority vote (first file breaks
     # ties); multiline: any file with an unterminated quote line
     if delimiter:

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import json
 import math
+import pickle
 
 from pyspark.sql import types as T
 
@@ -265,14 +266,16 @@ def _struct_to_tuple(v, t: T.DataType):
 
 def make_map_in_pandas(fn, in_fields: list[str], out_specs, out_kind,
                        op_name: str, keep_fields: list[str] | None = None,
-                       capture: bool = True, pass_through_code: bool = True,
-                       in_types: list | None = None,
+                       capture: bool = True, in_types: list | None = None,
                        coerce_bool: bool = False,
                        null_flags: dict | None = None):
     """Build a mapInPandas function applying ``fn`` row-at-a-time.
 
     in_fields:   input column names fed to the UDF (tuple order)
     out_specs:   [(out_col_name, spark_type)] for UDF outputs
+    out_kind:    'scalar' | 'tuple' | 'dict' (infer_output_type), or
+                 'pickle': one BinaryType output holding the pickled
+                 result (PYOBJECT rows, any Python value fits)
     keep_fields: passthrough columns copied to the output unchanged
     capture:     wrap per-row exceptions into (__exc_code, __exc_payload)
     in_types:    Spark types of in_fields (struct inputs -> tuples)
@@ -335,12 +338,15 @@ def make_map_in_pandas(fn, in_fields: list[str], out_specs, out_kind,
                         vals = [r[j] for j in range(len(out_names))]
                     elif out_kind == "dict":
                         vals = [r[name] for name in out_names]
+                    elif out_kind == "pickle":
+                        vals = [pickle.dumps(r)]
                     elif coerce_bool:
                         vals = [bool(r)]
                     else:
                         vals = [r]
-                    if not all(_conforms(v, t)
-                               for v, (_, t) in zip(vals, out_specs)):
+                    if out_kind != "pickle" and not all(
+                            _conforms(v, t)
+                            for v, (_, t) in zip(vals, out_specs)):
                         if not capture:
                             raise TypeError(
                                 f"UDF output {vals!r} does not fit the "
